@@ -1,26 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Print a registered query's formatted physical plan — the capture tool
   * behind PLANS.md (`sbt "runMain graft.PlanDump knn_pq_batch
   * /root/testdata/sf0.01"`). Formatted mode shows scan detail
   * (PushedFilters, ReadSchema, PartitionFilters) unelided.
+  *
+  * Usage: `PlanDump <q1,q2,...> [sfDir] [dir/SUFFIX] [exec]`. A trailing
+  * `exec` runs each query (`collect`) before printing, so the plan shown is
+  * AQE's final adaptive plan — where runtime shapes such as ReusedExchange,
+  * coalesced partitions and broadcast conversions appear — instead of the
+  * static plan.
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse(sys.error("usage: PlanDump <query> [sfDir]"))
+  def main(argv: Array[String]): Unit = {
+    val exec = argv.lastOption.contains("exec")
+    val args = if (exec) argv.init else argv
+    val name = args.headOption.getOrElse(
+      sys.error("usage: PlanDump <query> [sfDir] [dir/SUFFIX] [exec]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(32), "graft-plandump")
     // Batch mode (round-18 deliverable): comma-separated names + an output
     // template "dir/SUFFIX" write one formatted plan per query to
     // dir/<query>_SUFFIX.txt in ONE JVM (a per-query JVM costs ~30 s each).
@@ -29,9 +29,11 @@ object PlanDump {
     names.foreach { n =>
       val q = Registry.all.find(_.name == n)
         .getOrElse(sys.error(s"unknown query '$n'"))
-      val plan = try q.fn(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
+      val plan = try {
+        val df = q.fn(spark, sfDir)
+        if (exec) df.collect()
+        df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      } catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
       outTpl match {
         case Some(tpl) =>
           val slash = tpl.lastIndexOf('/')

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Dedup
 import graft.sources.ZipfCorpus
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot measurement main for the prefix-filter/LSH crossover on the
@@ -22,14 +21,7 @@ object ZipfCrossover {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(50000)
     val runPlain = !args.lift(1).contains("noplain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(32), "graft-zipf-crossover")
     import spark.implicits._
 
     val docs = ZipfCorpus.synth(spark.range(n.toLong).select(col("id").as("doc_id")))

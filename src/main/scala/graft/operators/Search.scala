@@ -177,15 +177,66 @@ object Search {
     else post.join(broadcast(df), "word")
   }
 
-  /** Q2-Q4 core: reference scoring over the single-pass query postings. */
-  private def scoresInPlan(spark: SparkSession, docs: DataFrame,
+  /** Q2 in-plan: the single-pass query postings joined with the query's
+    * own term counts — one (doc_id, word, tf, df, qtf) row per matched
+    * doc × query term, the input of every scoring kernel below.
+    */
+  private def queryMatches(spark: SparkSession, docs: DataFrame,
                            query: String): DataFrame =
-    queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word")
+    queryPostings(docs, query).join(broadcast(queryTerms(spark, query)), "word")
+
+  /** Q3-Q4 kernel: the reference score (quirk Q-b, Query.java:113-115),
+    * score(d) = Σ_{w∈q∩d} tf_d·tf_q/df², over matched (doc_id, tf, qtf,
+    * df) rows. Shared by every parity tier, in-plan, indexed and
+    * incremental, so their answers cannot drift apart.
+    */
+  private[operators] def parityScores(matched: DataFrame): DataFrame =
+    matched
       .select(col("doc_id"),
         (col("tf") * col("qtf") / (col("df").cast("double") * col("df"))).as("part"))
       .groupBy("doc_id")
       .agg(Stable.stab(sum(col("part")), 9).as("score"))
+
+  /** BM25 kernel over matched (doc_id, tf, qtf, df) rows; `dl` holds
+    * (doc_id, dl) for every doc with ≥ 1 kept token, so N and avgdl are
+    * its row count and mean. Formula and determinism: see searchTopKBm25.
+    */
+  private def bm25Scores(matched: DataFrame, dl: DataFrame,
+                         k1: Double, b: Double): DataFrame = {
+    // sum/count explicitly (not avg): dl is integer-valued, so the sum is
+    // EXACT under any aggregation order and avgdl is bit-stable across
+    // engines with no stabilizer
+    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
+      (sum("dl") / count(lit(1))).as("avgdl"))
+    matched
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"),
+        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+          col("qtf") * (col("tf") * (k1 + 1)) /
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
+      .groupBy("doc_id")
+      .agg(Stable.stab(sum(col("part")), 6).as("score"))
+  }
+
+  /** BM25 document lengths from a (doc_id, n_tokens) table. Docs with
+    * n_tokens = 0 are dropped, so N/avgdl match the in-plan tier, whose
+    * dl table only has rows for docs with ≥ 1 kept token.
+    */
+  private def lengths(nTokens: DataFrame): DataFrame =
+    nTokens.filter(col("n_tokens") > 0)
+      .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
+
+  /** Q5-Q8 tail shared by the scored tiers: exact-k heap on (score desc,
+    * doc_id) — quirk Q-d's tie-break — then the k rows' metadata from
+    * `docinfo` via a broadcast join.
+    */
+  private[operators] def topKWithDocInfo(scores: DataFrame, docinfo: DataFrame,
+                                         k: Int): DataFrame =
+    scores.orderBy(desc("score"), asc("doc_id")).limit(k)
+      .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
+      .select("doc_id", "score", "source", "lang")
+      .orderBy(desc("score"), asc("doc_id"))
 
   /** Q2-Q8: score + top-k. Scoring formula is the reference's exactly
     * (quirk Q-b, Query.java:113-115): score(d) = Σ_{w∈q∩d} tf_d·tf_q/df².
@@ -203,11 +254,7 @@ object Search {
     // SinglePartition (guarded — no-op at production split counts) lets
     // every downstream aggregate/join plan exchange-free.
     val docs = Spread.tight(Tables.documents(spark, dir))
-    scoresInPlan(spark, docs, query)
-      .orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docInfo(docs).select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    topKWithDocInfo(parityScores(queryMatches(spark, docs, query)), docInfo(docs), k)
   }
 
   /** BM25 top-k — the standard probabilistic ranking beside the parity
@@ -232,25 +279,8 @@ object Search {
     val docs = Spread.tight(Tables.documents(spark, dir))
     val dl = tokens(docs).groupBy("doc_id")
       .agg(count(lit(1)).cast("double").as("dl"))
-    // sum/count explicitly (not avg): dl is integer-valued, so the sum is
-    // EXACT under any aggregation order and avgdl is bit-stable across
-    // engines with no stabilizer
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum("dl") / count(lit(1))).as("avgdl"))
-    val scored = queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("qtf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 6).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docInfo(docs).select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    topKWithDocInfo(bm25Scores(queryMatches(spark, docs, query), dl, k1, b),
+      docInfo(docs), k)
   }
 
   /** BM25 with PRECOMPUTED length statistics — the steady-state form of
@@ -269,51 +299,22 @@ object Search {
                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // guarded SinglePartition pin — see searchTopK
     val docs = Spread.tight(Tables.documents(spark, dir))
-    val dl = dlStats.filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum("dl") / count(lit(1))).as("avgdl"))
-    val scored = queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("qtf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 6).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docInfo(docs).select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    topKWithDocInfo(bm25Scores(queryMatches(spark, docs, query), lengths(dlStats), k1, b),
+      docInfo(docs), k)
   }
 
-  /** Shared Q2-Q8 tail over any (postings, vocab, docinfo) triple. */
-  /** Exact-phrase top-k (adjacent 2-token match): docs containing the
-    * phrase, ranked by its per-doc frequency. The match count is a
-    * ROW-LOCAL array filter over the doc's bigram stream — no explode, no
-    * shuffle before the top-k heap. The bigram stream is built with
-    * `zip_with` over two slices of the token array, NOT
-    * `transform(sequence(...), i => element_at(arr, i))`: higher-order
-    * functions run interpreted, and the indexed-lambda form re-enters the
-    * element_at path per index — measured 17× slower at sf0.1 (19.4 s vs
-    * 1.2 s) for identical output. A production deployment would serve
-    * this from bigram postings (same layout as the unigram index); the
-    * scan shape here IS that index's build pass.
+  /** Distributed retrieval EVALUATION — the offline quality job a search
+    * pipeline runs on every index build, as ONE batch plan instead of a
+    * per-query loop: a deterministic query set (consecutive-word-id pairs
+    * from the corpus's own vocabulary), every query scored against every
+    * matching posting in a single broadcast join, ranks via per-query
+    * windows (≤ nQueries partitions), and graded-relevance-free metrics
+    * (P@k, MRR@k, with relevance := "doc contains BOTH query terms" —
+    * boolean-AND qrels both engines can derive). The per-(query, doc)
+    * term-presence count doubles as the relevance label, so scoring and
+    * labeling share one aggregate.
     */
   def evalMetrics(docs: DataFrame, nQueries: Int = 20, k: Int = 10): DataFrame = {
-    // Distributed retrieval EVALUATION — the offline quality job a search
-    // pipeline runs on every index build, as ONE batch plan instead of a
-    // per-query loop: a deterministic query set (consecutive-word-id
-    // pairs from the corpus's own vocabulary), every query scored
-    // against every matching posting in a single broadcast join, ranks
-    // via per-query windows (≤ nQueries partitions), and graded-
-    // relevance-free metrics (P@k, MRR@k, with relevance := "doc
-    // contains BOTH query terms" — boolean-AND qrels both engines can
-    // derive). The per-(query, doc) term-presence count doubles as the
-    // relevance label, so scoring and labeling share one aggregate.
-    import graft.functions.Stable
     // metadata-scale path (round 19): bdw feeds the vocabulary AND the
     // postings branch, vocab is consumed three times — cut both shared
     // subtrees when the source scan is tiny (see queryPostings)
@@ -350,6 +351,18 @@ object Search {
       .orderBy("query_id")
   }
 
+  /** Exact-phrase top-k (adjacent 2-token match): docs containing the
+    * phrase, ranked by its per-doc frequency. The match count is a
+    * ROW-LOCAL array filter over the doc's bigram stream — no explode, no
+    * shuffle before the top-k heap. The bigram stream is built with
+    * `zip_with` over two slices of the token array, NOT
+    * `transform(sequence(...), i => element_at(arr, i))`: higher-order
+    * functions run interpreted, and the indexed-lambda form re-enters the
+    * element_at path per index — measured 17× slower at sf0.1 (19.4 s vs
+    * 1.2 s) for identical output. A production deployment would serve
+    * this from bigram postings (same layout as the unigram index); the
+    * scan shape here IS that index's build pass.
+    */
   def phraseTopK(spark: SparkSession, dir: String,
                  phrase: String = "table hash", k: Int = 10): DataFrame = {
     // Spread: the row-local bigram scoring ran in the single scan task of
@@ -371,24 +384,6 @@ object Search {
       .join(broadcast(docInfo(docs).select("doc_id", "source", "lang")), "doc_id")
       .select("doc_id", "phrase_tf", "source", "lang")
       .orderBy(desc("phrase_tf"), asc("doc_id"))
-  }
-
-  private def scoreAndRank(spark: SparkSession, post: DataFrame, vocab: DataFrame,
-                           docinfo: DataFrame, query: String, k: Int): DataFrame = {
-    val qt = queryTerms(spark, query)
-      .join(vocab, "word") // keep df + word_id; drops non-vocab terms (I2 semantics)
-      .select("word_id", "qtf", "df")
-    val scores = post
-      .join(broadcast(qt), "word_id")
-      .select(col("doc_id"),
-        (col("tf") * col("qtf") / (col("df").cast("double") * col("df"))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 9).as("score"))
-    scores
-      .orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
   }
 
   /** Number of word-id hash buckets the persisted postings are partitioned
@@ -446,7 +441,7 @@ object Search {
     val corpus = Tables.corpusJson(spark, corpusDir)
     // guarded SinglePartition pin — see searchTopK
     val docs = Spread.tight(corpus.select(col("id").as("doc_id"), col("text")))
-    scoresInPlan(spark, docs, query)
+    parityScores(queryMatches(spark, docs, query))
       .orderBy(desc("score"), asc("doc_id")).limit(k)
       .join(broadcast(corpus.select(col("id").as("doc_id"), col("url"), col("title"))),
         "doc_id")
@@ -454,41 +449,34 @@ object Search {
       .select("title", "url")
   }
 
-  // ---- typed boundary (Dataset[T] views of the pipeline edges) ----
-
-  import graft.model._
-  import org.apache.spark.sql.{Dataset, Encoders}
-
-  def vocabularyDS(docs: DataFrame): Dataset[VocabEntry] =
-    vocabulary(docs).as(Encoders.product[VocabEntry])
-
-  def postingsDS(docs: DataFrame): Dataset[Posting] =
-    postings(docs, vocabulary(docs)).select("doc_id", "word_id", "tf")
-      .as(Encoders.product[Posting])
-
-  def searchTopKDS(spark: SparkSession, dir: String,
-                   query: String = DefaultQuery, k: Int = 10): Dataset[SearchHit] =
-    searchTopK(spark, dir, query, k).as(Encoders.product[SearchHit])
-
-  /** Query the persisted index. The postings scan carries a `wb IN (...)`
-    * predicate computed from the query's own word ids, so partition pruning
-    * skips every bucket directory the query doesn't touch — the plan reads
-    * O(query terms) buckets regardless of corpus size. Result is identical
-    * to `searchTopK` (same formula, same tie-break).
+  /** Query terms resolved against a persisted index's vocabulary —
+    * (word_id, qtf, df), non-vocab terms dropped (I2 semantics) — joined
+    * with the postings scan. The scan carries a `wb IN (...)` predicate
+    * computed from the query's own word ids, so partition pruning skips
+    * every bucket directory the query doesn't touch — the plan reads
+    * O(query terms) buckets regardless of corpus size.
     */
-  def searchTopKIndexed(spark: SparkSession, indexDir: String,
-                        query: String = DefaultQuery, k: Int = 10): DataFrame = {
+  private def indexedMatches(spark: SparkSession, indexDir: String,
+                             query: String): DataFrame = {
     val vocab = spark.read.parquet(s"$indexDir/vocabulary")
-    val docinfo = spark.read.parquet(s"$indexDir/docinfo")
-    val qWordIds = queryTerms(spark, query).join(vocab, "word")
-      .select("word_id").collect().map(_.getLong(0)) // ≤ |query terms| rows
+    val qt = queryTerms(spark, query).join(vocab, "word")
+      .select("word_id", "qtf", "df")
+    val qWordIds = qt.select("word_id").collect().map(_.getLong(0)) // ≤ |q| rows
     val qBuckets = qWordIds.map(w => (w % IndexBuckets).toInt).distinct.toSeq
     // guarded SinglePartition pin on the bucket-pruned scan (≤ |q| bucket
     // dirs; at a production index each bucket is many splits → no-op)
     val post = Spread.tight(spark.read.parquet(s"$indexDir/postings")
       .filter(col("wb").isin(qBuckets: _*)))
-    scoreAndRank(spark, post, vocab, docinfo, query, k)
+    post.join(broadcast(qt), "word_id")
   }
+
+  /** Query the persisted index (bucket-pruned, see indexedMatches). Result
+    * is identical to `searchTopK` (same formula, same tie-break).
+    */
+  def searchTopKIndexed(spark: SparkSession, indexDir: String,
+                        query: String = DefaultQuery, k: Int = 10): DataFrame =
+    topKWithDocInfo(parityScores(indexedMatches(spark, indexDir, query)),
+      spark.read.parquet(s"$indexDir/docinfo"), k)
 
   /** BM25 served from the persisted index — identical answer to
     * `searchTopKBm25` (same oracle gates both), with ZERO corpus scans:
@@ -501,35 +489,9 @@ object Search {
   def searchTopKBm25Indexed(spark: SparkSession, indexDir: String,
                             query: String = DefaultQuery, k: Int = 10,
                             k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val vocab = spark.read.parquet(s"$indexDir/vocabulary")
     val docinfo = spark.read.parquet(s"$indexDir/docinfo")
-    val qt = queryTerms(spark, query).join(vocab, "word")
-      .select("word_id", "qtf", "df")
-    val qWordIds = qt.select("word_id").collect().map(_.getLong(0)) // ≤ |q| rows
-    val qBuckets = qWordIds.map(w => (w % IndexBuckets).toInt).distinct.toSeq
-    // guarded SinglePartition pin — see searchTopKIndexed
-    val post = Spread.tight(spark.read.parquet(s"$indexDir/postings")
-      .filter(col("wb").isin(qBuckets: _*)))
-    // docs whose every token was filtered carry n_tokens = 0 and are
-    // excluded from the corpus statistics — matching the in-plan twin,
-    // whose dl table only has rows for docs with ≥ 1 kept token
-    val dl = docinfo.filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum("dl") / count(lit(1))).as("avgdl"))
-    val scored = post
-      .join(broadcast(qt), "word_id")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("qtf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 6).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    topKWithDocInfo(
+      bm25Scores(indexedMatches(spark, indexDir, query), lengths(docinfo), k1, b),
+      docinfo, k)
   }
 }

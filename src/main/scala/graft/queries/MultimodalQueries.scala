@@ -73,12 +73,13 @@ object MultimodalQueries {
     // followed by the entropy-coded-segment skip), scan count, APP0
     // presence — all three variants (baseline gray, baseline color,
     // PROGRESSIVE color). The pinned literals are the JDK ImageIO
-    // ENCODER's emission constants, measured by `graft.JpegMetaSweep`
-    // over 50k ids on this JRE (Temurin-style Debian 17.0.20: baseline
-    // = 4 DHTs / 1 scan / SOF0; progressive = 10 DHTs total / 10 scans
-    // / SOF2) — a JDK vendor/version change can move them; re-run the
-    // sweep and re-pin rather than debugging a hash-fail blind
-    // (BASELINE.md round-18 note).
+    // ENCODER's emission constants, measured by decoding the markers of
+    // all 50k media ids and tallying (DHT count, scan count, SOF) per
+    // variant on JDK 17.0.20 (Debian build): baseline = 4 DHTs / 1 scan
+    // / SOF0; progressive = 10 DHTs total / 10 scans / SOF2. A JDK
+    // vendor/version change can move them; re-run that tally and
+    // re-pin rather than debugging a hash-fail blind (BASELINE.md
+    // round-18 note).
     GraftQuery("multimodal_jpeg_meta",
       (s, d) => Multimodal.decodeJpegMarkers(persistedMediaJpeg(s, d))
         .orderBy("media_id"),

@@ -899,8 +899,14 @@ object TextAnalysisQueries {
     // composes the same CTEs the per-signal oracles already pin, so the
     // whole pipeline decision is hash-gated, not just its parts.
     GraftQuery("text_curate",
-      // Spread: curate's three corpus passes (clean gate, repetition,
-      // bigram NLL) each tokenized the single-split scan serially
+      // Raw scan, no Spread (round 19): the clean gate became a
+      // row-local projection (see Curation.curate), so only repetition
+      // and bigram NLL still explode the corpus, and the Spread wrapper
+      // went with that restructure. sf0.1 / 32-core bench min-of-3,
+      // round 18 → 19: text_curate 3.47 → 3.18 s, text_curate_full
+      // 4.00 → 3.39 s (BENCH_r18/r19.json). Those numbers measure the
+      // restructure and the unwrapped scan together; the scan alone was
+      // not timed separately.
       (s, d) => graft.operators.Curation.curate(
           Tables.documents(s, d),
           DedupQueries.persistedShingles(s, d),

@@ -3,10 +3,21 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** array_dot registered through SparkSessionExtensions (GraftExtensions)
-  * is a first-class SQL function with codegen.
+  * is a first-class SQL function with codegen, and the shared session from
+  * `Sessions.local` carries the settings every caller relies on.
   */
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  test("Sessions.local: UTC session time zone, AQE on, GraftExtensions injected") {
+    val conf = spark.conf
+    assert(spark.sparkContext.master == "local[8]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "8")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("array_dot")))
+  }
 
   test("array_dot is SQL-callable via GraftExtensions") {
     val r = spark.sql(
